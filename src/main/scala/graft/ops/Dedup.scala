@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.expr.KernelExpressions
 import graft.kernel.Hashing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -239,42 +240,32 @@ object Dedup {
       .select(col("id"), col("component"), col("score"), col("keeper"))
   }
 
-  /** k-word shingles of a token array (empty when fewer than k tokens). */
-  def wordShingles(tokens: Column, k: Int): Column =
-    when(size(tokens) < k, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(tokens) - k),
-        i => array_join(slice(tokens, i + 1, lit(k)), " ")))
-
-  /** Sorted distinct 64-bit shingle fingerprints: k-word shingles hashed to
-    * longs in ONE string-hash pass. All downstream dedup math (minhash,
-    * prefix filtering, Jaccard verify) runs on the fixed-width longs —
-    * set ops and sorts on longs instead of repeated string comparisons. A
+  /** Sorted distinct 64-bit shingle fingerprints of a text column: its
+    * single-space k-word shingles, each hashed to a long by
+    * [[graft.expr.Shingles64Expr]] in ONE native pass over the text's bytes
+    * (bit-identical to `xxhash64` of the joined shingle string, without
+    * allocating a token or a shingle). All downstream dedup math (minhash,
+    * prefix filtering, Jaccard verify) runs on the fixed-width longs — set
+    * ops and sorts on longs instead of repeated string comparisons. A
     * 64-bit collision merging two distinct shingles happens with
     * probability ~|sh|²/2^64 per doc (negligible; the DuckDB oracles
-    * verify value-identity to string-set Jaccard on the test corpus). */
-  def shingleFingerprints(tokens: Column, k: Int): Column =
-    sort_array(array_distinct(transform(wordShingles(tokens, k),
-      x => xxhash64(x))))
+    * verify value-identity to string-set Jaccard on the test corpus).
+    * Null text gives null; text with fewer than k tokens gives [].
+    *
+    * Never rebuild this from `split` + `transform`: Spark's higher-order
+    * functions are `CodegenFallback`, and the `split` inlined into the
+    * lambda re-runs once per shingle — O(tokens²) per doc (SCALE.md). */
+  def shingleFingerprints(text: Column, k: Int): Column =
+    sort_array(array_distinct(KernelExpressions.shingles64(text, k)))
 
   /** MinHash signature over 64-bit shingle fingerprints: sig[s] =
     * min over x of xxhash64(x, s) — per-seed hashing of the fixed-width
     * fingerprint (cheap long input) instead of re-hashing shingle strings.
-    *
-    * Formulated as a single-pass `aggregate` rather than
-    * transform(seeds, s -> array_min(transform(shingles, ...))): the outer
-    * lambda of that shape references the shingles expression once
-    * *statically* but evaluates it once per seed at *runtime*, so when
-    * column pruning inlines the upstream shingle construction the whole
-    * tokenize+shingle pipeline re-runs numHashes times per row (measured
-    * 32× difference at sf0.1). Inside the aggregate the lambda variable is
-    * an already-evaluated value — no re-evaluation per seed. */
+    * Computed by one native loop ([[graft.expr.MinHash64Expr]]), not an
+    * `aggregate`/`zip_with` fold: Spark's higher-order functions are
+    * `CodegenFallback` and run interpreted. */
   def minhashSignature(shingleHashes: Column, numHashes: Int): Column =
-    aggregate(
-      shingleHashes,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, x) => zip_with(acc, sequence(lit(0L), lit(numHashes - 1L)),
-        (m, s) => least(m, xxhash64(x, s))))
+    KernelExpressions.minhash64(shingleHashes, numHashes)
 
   /** LSH band keys: the signature is cut into `numBands` bands of
     * `bandSize`; each band's slice hashes structurally to one bucket key.
@@ -317,7 +308,7 @@ object Dedup {
   private[graft] def shingleTable(df: DataFrame, idCol: String,
       textCol: String, shingleK: Int): DataFrame =
     df.select(col(idCol).as("id"),
-        shingleFingerprints(split(col(textCol), " "), shingleK).as("shingles"))
+        shingleFingerprints(col(textCol), shingleK).as("shingles"))
       .localCheckpoint(eager = false)
       .filter(size(col("shingles")) > 0)
 
@@ -479,7 +470,7 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3): DataFrame = {
     val spark = df.sparkSession
-    graft.expr.KernelExpressions.register(spark)
+    KernelExpressions.register(spark)
     // materialized once: the block self-join reads the fingerprints per
     // side, and the simhash kernel scan must not re-run per side (the
     // shingleTable rationale; 16 bytes/row, tiny)
@@ -535,7 +526,6 @@ object Dedup {
       groupCols: Seq[String],
       shingleK: Int = 3,
       threshold: Double = 0.3): DataFrame = {
-    val toks = split(col(textCol), " ")
     // sorted distinct shingle fingerprints: the sort IS the global total
     // order the prefix principle needs (any total order is valid; longs
     // sort far cheaper than shingle strings)
@@ -543,7 +533,7 @@ object Dedup {
     // sides) AND the verify join (both sides); see shingleTable
     val base = df.select(
       (groupCols.map(col) :+ col(idCol).as("id") :+
-        shingleFingerprints(toks, shingleK).as("sh")): _*)
+        shingleFingerprints(col(textCol), shingleK).as("sh")): _*)
       // filter AFTER the checkpoint boundary — see shingleTable: pushdown
       // would inline the shingle expression serially into the scan stage
       .localCheckpoint(eager = false)
@@ -612,7 +602,7 @@ object Dedup {
     // generation AND the verify join (see shingleTable; at a 100 TB base
     // the same pattern persists the base sketch to a stored table)
     def shingled(df: DataFrame) = df.select(col("doc_id"),
-      shingleFingerprints(split(col("text"), " "), shingleK).as("sh"))
+      shingleFingerprints(col("text"), shingleK).as("sh"))
       // filter AFTER the checkpoint boundary — see shingleTable
       .localCheckpoint(eager = false)
       .filter(size(col("sh")) > 0)
@@ -665,8 +655,8 @@ object Dedup {
       k: Int = 8): DataFrame = {
     val grams = df.select(
       col(idCol).cast("long").as("doc_id"),
-      explode(shingleFingerprints(
-        split(coalesce(col(textCol), lit("")), " "), k)).as("gram"))
+      explode(shingleFingerprints(coalesce(col(textCol), lit("")), k))
+        .as("gram"))
     val freq = grams.groupBy(col("gram"))
       .agg(count(lit(1)).as("n_docs")) // grams are distinct per doc
     grams.join(freq, Seq("gram"))
@@ -694,8 +684,8 @@ object Dedup {
       idCol: String, textCol: String, k: Int = 5): DataFrame = {
     def grams(d: DataFrame) = d.select(
       col(idCol).cast("long").as("doc_id"),
-      explode(shingleFingerprints(
-        split(coalesce(col(textCol), lit("")), " "), k)).as("gram"))
+      explode(shingleFingerprints(coalesce(col(textCol), lit("")), k))
+        .as("gram"))
     val benchGrams = grams(bench).select(col("gram")).distinct()
       .withColumn("is_bench", lit(true))
     grams(corpus)
@@ -813,11 +803,12 @@ object Dedup {
     * (doc_id, text). */
   private[graft] def duplicatedSpanSegments(base: DataFrame, k: Int,
       minTokens: Int, minCount: Long, keepFirst: Boolean): DataFrame = {
-    val toks = split(col("text"), " ")
-    // (doc_id, pos, gram-fp), NOT per-doc distinct: occurrence counts
+    // (doc_id, pos, gram-fp), NOT per-doc distinct: occurrence counts;
+    // the native shingle hashes come in token-position order
     val grams = base
-      .select(col("doc_id"), posexplode(wordShingles(toks, k)))
-      .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("gram"))
+      .select(col("doc_id"),
+        posexplode(KernelExpressions.shingles64(col("text"), k)))
+      .select(col("doc_id"), col("pos"), col("col").as("gram"))
     // duplicated-gram start positions → covered token indices (distinct:
     // overlapping grams cover shared tokens once — required by islands);
     // keepFirst exempts each gram's canonical (min (doc_id, pos))
@@ -970,7 +961,7 @@ object Dedup {
       .join(comp, Seq("doc_id"), "left_outer")
       .withColumn("component", coalesce(col("component"), col("doc_id")))
       .withColumn("split",
-        when(pmod(graft.expr.KernelExpressions.mix64(spark, "component"),
+        when(pmod(KernelExpressions.mix64(spark, "component"),
           lit(1000L)) < holdoutPerMille.toLong, lit("eval"))
           .otherwise(lit("train")))
   }
@@ -997,7 +988,7 @@ object Dedup {
       s"bits must be a power of two >= 64, got $bits")
     require(numHashes >= 1 && numHashes <= 16,
       s"numHashes must be in [1,16], got $numHashes")
-    graft.expr.KernelExpressions.register(keyed.sparkSession)
+    KernelExpressions.register(keyed.sparkSession)
     keyed
       .select(keyed.columns.map(col) :+
         explode(sequence(lit(0L), lit(numHashes - 1L))).as("i"): _*)
@@ -1022,7 +1013,7 @@ object Dedup {
   def bloomBuild(df: DataFrame, keyCol: String, bits: Int = 1 << 16,
       numHashes: Int = 4): DataFrame = {
     val spark = df.sparkSession
-    graft.expr.KernelExpressions.register(spark)
+    KernelExpressions.register(spark)
     val set = bloomProbes(
       df.select(expr(s"graft_fnv1a64($keyCol)").as("h")), bits, numHashes)
       .groupBy(col("word")).agg(expr("bit_or(mask)").as("bits32"))
@@ -1042,7 +1033,7 @@ object Dedup {
   def bloomScreen(df: DataFrame, idCol: String, keyCol: String,
       filter: DataFrame, bits: Int = 1 << 16,
       numHashes: Int = 4): DataFrame = {
-    graft.expr.KernelExpressions.register(df.sparkSession)
+    KernelExpressions.register(df.sparkSession)
     bloomProbes(
       df.select(col(idCol).as("doc_id"),
         expr(s"graft_fnv1a64($keyCol)").as("h")), bits, numHashes)

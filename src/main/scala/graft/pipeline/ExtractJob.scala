@@ -41,17 +41,19 @@ final case class KeyedPage(
 
 /** The extraction pipeline (SURVEY.md §3.1 Spark lifecycle):
   *
-  * scan → Column-level pruning/filters (resume anti-join J1, lang filter —
-  * kept BEFORE the typed boundary so Catalyst pushes them into the parquet
-  * scan) → one explicit repartition on (bucket, salt) → `mapPartitions`
-  * kernel (X1–X4, F1–F10, C1–C4, P1 per row; pages never leave their row,
-  * so A1/A2 are row-local — zero aggregation shuffle) → bucketed partitioned
-  * parquet write + per-bucket lineage rows (A11).
+  * scan → Column-level pruning/filters (resume bucket prune J1, lang
+  * filter — kept BEFORE the typed boundary so Catalyst pushes them into the
+  * parquet scan) → `mapPartitions` kernel (X1–X4, F1–F10, C1–C4, P1 per
+  * row; pages never leave their row, so A1/A2 are row-local — zero
+  * aggregation shuffle) → one explicit repartition on (bucket, salt) over
+  * the extracted rows → bucketed partitioned parquet write + per-bucket
+  * lineage rows (A11).
   *
-  * Exactly ONE shuffle on the hot path: the explicit repartition. Lineage is
-  * computed by re-reading cheap scalar columns of the freshly written output
-  * (columnar scan; never re-reads html), so a "done" lineage row implies the
-  * bucket's data is durable — that ordering is what makes resume safe.
+  * Exactly ONE shuffle, AFTER the kernel: the explicit repartition, whose
+  * payload is extracted output, never raw html. Lineage is computed by
+  * re-reading cheap scalar columns of the freshly written output (columnar
+  * scan; never re-reads html), so a "done" lineage row implies the bucket's
+  * data is durable — that ordering is what makes resume safe.
   */
 object ExtractJob {
 

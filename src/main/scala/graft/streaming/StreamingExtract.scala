@@ -231,9 +231,9 @@ object StreamingExtract {
     val spark = docs.sparkSession
     import spark.implicits._
     val bandSize = numHashes / numBands
-    val toks = split(coalesce($"extracted_text", lit("")), " ")
     val sigs = docs.toDF()
-      .select($"url", graft.ops.Dedup.shingleFingerprints(toks, shingleK).as("sh"))
+      .select($"url", graft.ops.Dedup.shingleFingerprints(
+        coalesce($"extracted_text", lit("")), shingleK).as("sh"))
       .filter(size($"sh") > 0)
       .withColumn("sig", graft.ops.Dedup.minhashSignature($"sh", numHashes))
       .withColumn("bk",

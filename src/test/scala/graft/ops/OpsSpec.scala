@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.kernel.Hashing
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -780,6 +780,99 @@ class OpsSpec extends AnyFunSuite {
     val fp = docs.select(col("text"), expr("graft_fingerprint64(text)")).collect()
     fp.foreach(r => assert(r.getLong(1) ==
       graft.kernel.Hashing.rollingFingerprint(r.getString(0))))
+  }
+
+  // The composed built-in chain that graft_shingles64 / graft_minhash64
+  // replaced, kept here only as the reference they must match bit for bit.
+  private def refShingleHashes(text: Column, k: Int): Column = {
+    val toks = split(text, " ")
+    transform(
+      when(size(toks) < k, array().cast("array<string>"))
+        .otherwise(transform(sequence(lit(0), size(toks) - k),
+          i => array_join(slice(toks, i + 1, lit(k)), " "))),
+      x => xxhash64(x))
+  }
+
+  private def refMinhash(shingles: Column, m: Int): Column =
+    aggregate(shingles, array_repeat(lit(Long.MaxValue), m),
+      (acc, x) => zip_with(acc, sequence(lit(0L), lit(m - 1L)),
+        (mn, s) => least(mn, xxhash64(x, s))))
+
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("native shingle and minhash expressions ≡ the split/transform/" +
+      "xxhash64 chain, interpreted AND codegen'd") {
+    val ex = new graft.kernel.Extractor(graft.kernel.ProbeConfig())
+    val synth = (0L until 40L).map(i =>
+      ex.extract(graft.kernel.Synth.row(11L, i).html).extractedText)
+    val edge = Seq(null, "", " ", "  ", "a", "a b", "one two three",
+      "a  b   c d", " leading space here", "trailing space here ",
+      "  both  ends  doubled  ", "tab\tand\nnewline are not spaces at all",
+      "héllo wörld — 日本語 テキスト 🙂 emoji ünïcode ok fine yes",
+      "ñ ñ ñ ñ ñ ñ ñ ñ ñ ñ")
+    val dir = java.nio.file.Files.createTempDirectory("graft_shingles_").toString
+    (synth ++ edge).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text").write.mode("overwrite").parquet(dir)
+    // a file relation, so the projection is not constant-folded over a
+    // local Seq; plus one malformed UTF-8 row (0xFF, a truncated 0xC3)
+    val src = spark.read.parquet(dir).unionByName(spark.range(1).select(
+      lit(-1L).as("id"), unhex(lit("6120FF2062206320C3")).cast("string").as("text")))
+    assert(src.count() == synth.size + edge.size + 1)
+
+    val modes = Seq(
+      Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"),
+      Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.fallback" -> "false"))
+    for (mode <- modes; k <- Seq(1, 3, 8)) withConf(mode: _*) {
+      val q = src.select(col("id"),
+        graft.expr.KernelExpressions.shingles64(col("text"), k).as("nat"),
+        refShingleHashes(col("text"), k).as("ref"),
+        Dedup.shingleFingerprints(col("text"), k).as("fp"),
+        sort_array(array_distinct(refShingleHashes(col("text"), k))).as("fp_ref"))
+        .select(col("*"),
+          Dedup.minhashSignature(col("fp"), 32).as("sig"),
+          refMinhash(col("fp"), 32).as("sig_ref"))
+      val codegen = mode.contains("spark.sql.codegen.wholeStage" -> "true")
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("*(") == codegen, s"$mode\n$plan")
+      val rows = q.collect()
+      rows.foreach { r =>
+        val ctx = s"$mode k=$k id=${r.getLong(0)}"
+        assert(r.get(1) == r.get(2), ctx)
+        assert(r.get(3) == r.get(4), ctx)
+        assert(r.get(5) == r.get(6), ctx)
+      }
+      val byId = rows.map(r => r.getLong(0) -> r).toMap
+      val nullId = synth.size.toLong // the first edge case
+      assert(byId(nullId).isNullAt(1) && byId(nullId).isNullAt(5))
+      // "" is one empty token: a shingle only at k = 1
+      assert(byId(nullId + 1).getSeq[Long](1).size == (if (k == 1) 1 else 0))
+      // an empty shingle set signs as all Long.MaxValue
+      if (k == 8) assert(byId(nullId + 1).getSeq[Long](5) == Seq.fill(32)(Long.MaxValue))
+      assert(rows.count(r => !r.isNullAt(1) && r.getSeq[Long](1).size > 10) >= 30)
+    }
+
+    // a null element is skipped by xxhash64(x, s), leaving the seed
+    val withNull = spark.range(1).select(
+      array(lit(5L), lit(null).cast("long"), lit(-7L)).as("a"))
+    val r = withNull.select(Dedup.minhashSignature(col("a"), 8),
+      refMinhash(col("a"), 8)).collect()(0)
+    assert(r.get(0) == r.get(1))
+
+    // SQL registration; k and m must be constants >= 1
+    graft.expr.KernelExpressions.register(spark)
+    val sql = spark.sql("SELECT graft_shingles64('a b c', 2) AS s, " +
+      "graft_minhash64(array(1L, 2L), 4) AS m").collect()(0)
+    assert(sql.getSeq[Long](0).size == 2 && sql.getSeq[Long](1).size == 4)
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_shingles64('a b c', 0)").collect())
   }
 
   test("fingerprints: deterministic, order-sensitive") {

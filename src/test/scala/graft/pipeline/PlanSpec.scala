@@ -2,8 +2,13 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import graft.expr.Shingles64Expr
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -440,5 +445,46 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("LeftAnti"), p.take(1500))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoop"), p.take(800))
+  }
+
+  /** Fails when a shingle projection in `plan` sits under a lambda: every
+    * expression computing graft_shingles64 must be lambda-free, and no
+    * lambda may tokenize (`split`) — the per-element re-evaluation trap
+    * that made the composed shingle chain O(tokens²) per doc. */
+  private def assertLambdaFreeShingles(what: String, plan: LogicalPlan): Unit = {
+    val exprs = plan.collect { case n => n.expressions }.flatten
+    val shingling = exprs.filter(_.exists(_.isInstanceOf[Shingles64Expr]))
+    assert(shingling.nonEmpty, s"$what: no graft_shingles64 projection in\n$plan")
+    shingling.foreach(e => assert(!e.exists(_.isInstanceOf[LambdaFunction]),
+      s"$what: shingle projection under a lambda: $e"))
+    val tokenizingLambdas = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+      .filter(_.exists(e => e.isInstanceOf[StringSplit] || e.isInstanceOf[Shingles64Expr]))
+    assert(tokenizingLambdas.isEmpty, s"$what: ${tokenizingLambdas.mkString("\n")}")
+  }
+
+  test("shingle projections are native and lambda-free: shingleTable (its " +
+    "checkpointed plan), dupGramProfile, duplicatedSpanSegments") {
+    val docs = spark.read.parquet(corpus)
+      .select(col("url").as("doc_id"), coalesce(col("text"), lit("")).as("text"))
+    // shingleTable's projection is hidden behind its localCheckpoint: take
+    // the optimized plan the checkpoint action ran
+    val checkpointed = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpointed.put(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.shingleTable(docs, "doc_id", "text", 3)
+      val shingled = checkpointed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(shingled != null, "no localCheckpoint execution observed")
+      assertLambdaFreeShingles("shingleTable", shingled)
+    } finally spark.listenerManager.unregister(listener)
+    assertLambdaFreeShingles("dupGramProfile",
+      Dedup.dupGramProfile(docs, "doc_id", "text").queryExecution.optimizedPlan)
+    assertLambdaFreeShingles("duplicatedSpanSegments",
+      Dedup.duplicatedSpanSegments(docs, 8, 12, 2L, keepFirst = false)
+        .queryExecution.optimizedPlan)
   }
 }
