@@ -119,7 +119,7 @@ object SparkEntry {
 
   // -------------------------------------------------------------- flagship
 
-  /** Flagship: the full extraction pipeline (scan → salted repartition →
+  /** Flagship: the full extraction pipeline (scan → narrow
     * mapPartitions kernel → doc results) over a deterministic synthetic
     * Page corpus. Driver smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {

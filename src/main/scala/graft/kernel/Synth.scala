@@ -15,7 +15,7 @@ import java.util.SplittableRandom
   * 1 html link-farm, 1 PDF text doc (half as GENUINE %PDF-1.4 bytes with
   * Flate streams, half as the structured payload), 1 PDF-like scanned doc,
   * 1 junk / edge row. Host distribution is intentionally skewed (~30% of
-  * rows on one hot host) to exercise the salted repartition.
+  * rows on one hot host) to exercise skew handling.
   */
 object Synth {
 

@@ -259,9 +259,9 @@ object CurateJob {
   }
 
   /** Run the funnel and write `outDir/curated` (bucketed by id hash,
-    * partitioned — keepers only, PII-scrubbed) plus `outDir/verdicts`
-    * (every doc). Stats are aggregated from the COMMITTED verdict table,
-    * not accumulators. */
+    * partitioned through `BucketedSink` — keepers only, PII-scrubbed) plus
+    * `outDir/verdicts` (every doc). Stats are aggregated from the COMMITTED
+    * verdict table, not accumulators. */
   def run(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, langCol: String, outDir: String,
       cfg: CurateConfig = CurateConfig()): CurateStats = {
@@ -296,11 +296,10 @@ object CurateJob {
         keepers.withColumn(textCol,
           TextOps.scrubPii(coalesce(col(textCol), lit(""))))
       else keepers
-    scrubbed
-      .withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(cfg.buckets)).cast("int"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$outDir/curated")
+    BucketedSink.write(
+      scrubbed.withColumn("bucket",
+        pmod(xxhash64(col("doc_id")), lit(cfg.buckets)).cast("int")),
+      s"$outDir/curated")
 
     val counts = committed.groupBy(col("verdict")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

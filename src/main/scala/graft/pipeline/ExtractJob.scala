@@ -16,14 +16,14 @@ final case class ExtractStats(
     bytesOut: Long)
 
 /** Job parameters. `buckets` is the output-table bucketing (pmod of url
-  * hash) — the unit of lineage/resume; `saltFactor` splits one hot bucket
-  * across up to that many tasks (explicit skew salting per the north rule —
-  * AQE skew handling doesn't apply because the hot path has no join).
-  * `tasks` = 0 lets the job size the shuffle at 2× default parallelism. */
+  * hash) — the unit of lineage/resume. The write REBALANCEs by bucket, so
+  * AQE splits a hot bucket across writers by its measured bytes
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`); there is no salt.
+  * `tasks` > 0 is the REBALANCE's initial partition count; 0 takes the
+  * session's shuffle partitions. */
 final case class JobConfig(
     probe: ProbeConfig = ProbeConfig(),
     buckets: Int = 64,
-    saltFactor: Int = 4,
     tasks: Int = 0,
     resume: Boolean = false,
     langFilter: Option[String] = None,
@@ -45,12 +45,12 @@ final case class KeyedPage(
   * filter — kept BEFORE the typed boundary so Catalyst pushes them into the
   * parquet scan) → `mapPartitions` kernel (X1–X4, F1–F10, C1–C4, P1 per
   * row; pages never leave their row, so A1/A2 are row-local — zero
-  * aggregation shuffle) → one explicit repartition on (bucket, salt) over
-  * the extracted rows → bucketed partitioned parquet write + per-bucket
+  * aggregation shuffle) → one REBALANCE by bucket over the extracted rows
+  * (`BucketedSink`) → bucketed partitioned parquet write + per-bucket
   * lineage rows (A11).
   *
-  * Exactly ONE shuffle, AFTER the kernel: the explicit repartition, whose
-  * payload is extracted output, never raw html. Lineage is computed by
+  * Exactly ONE shuffle, AFTER the kernel: the REBALANCE, whose payload is
+  * extracted output, never raw html. Lineage is computed by
   * re-reading cheap scalar columns of the freshly written output (columnar
   * scan; never re-reads html), so a "done" lineage row implies the bucket's
   * data is durable — that ordering is what makes resume safe.
@@ -74,7 +74,7 @@ object ExtractJob {
     * end — extraction is per-row, so no byte of raw `html` ever crosses a
     * shuffle. Task sizing comes from the scan split
     * (spark.sql.files.maxPartitionBytes bounds html bytes per task). The
-    * explicit bucket+salt repartition happens in `run`, AFTER the kernel,
+    * REBALANCE by bucket happens in `run`, AFTER the kernel,
     * where the payload is the (smaller) extracted output — at 100 TB that
     * ordering is the difference between shuffling 100 TB of html and
     * shuffling ~30 TB of text. Used directly by the flagship entry and the
@@ -124,32 +124,18 @@ object ExtractJob {
   }
 
   def run(spark: SparkSession, input: DataFrame, outDir: String, cfg: JobConfig): ExtractStats = {
-    import spark.implicits._
     val acc = newAccums(spark)
     val done = if (cfg.resume) doneBuckets(spark, outDir) else Seq.empty
     val results = transform(spark, input, cfg, Some(acc), done)
 
-    // -- the one explicit shuffle: bucket + salt, post-kernel (D3/D4) -------
-    // Aligns writer tasks with output buckets (bounded file counts) and
-    // splits a hot bucket across saltFactor writers; the shuffle payload is
-    // extracted output, never raw html.
-    val nTasks =
-      if (cfg.tasks > 0) cfg.tasks
-      else math.max(cfg.buckets, spark.sparkContext.defaultParallelism * 2)
-    val placed = results.repartition(nTasks, $"bucket",
-      pmod(xxhash64($"url", lit(7)), lit(cfg.saltFactor)))
-
-    // -- sink: partitioned (bucketed-by-url-hash) parquet -------------------
-    // Resume writes with DYNAMIC partition overwrite, not append: if a
-    // previous run died in the docs-committed/lineage-missing window, the
-    // re-extraction of those buckets REPLACES their partitions instead of
-    // appending duplicates — resume is idempotent across any crash point.
-    if (cfg.resume)
-      placed.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$outDir/docs")
-    else
-      placed.write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/docs")
+    // -- sink: the one shuffle, a REBALANCE by bucket, post-kernel (D3/D4) --
+    // Its payload is extracted output, never raw html. Resume writes with
+    // DYNAMIC partition overwrite, not append: if a previous run died in
+    // the docs-committed/lineage-missing window, the re-extraction of those
+    // buckets REPLACES their partitions instead of appending duplicates —
+    // resume is idempotent across any crash point.
+    BucketedSink.write(results, s"$outDir/docs", cfg.tasks,
+      dynamicOverwrite = cfg.resume)
 
     // -- lineage AFTER data commit (resume-safety ordering) -----------------
     // Returned stats are aggregated from the lineage rows this invocation

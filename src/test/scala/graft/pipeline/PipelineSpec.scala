@@ -149,12 +149,39 @@ class PipelineSpec extends AnyFunSuite {
     val input = SynthSource.pages(spark, N, seed = 11L).toDF()
     val out1 = tmp(); val out8 = tmp()
     ExtractJob.run(spark, input, out1, JobConfig(buckets = 4, tasks = 1))
-    ExtractJob.run(spark, input, out8, JobConfig(buckets = 4, tasks = 8, saltFactor = 8))
+    ExtractJob.run(spark, input, out8, JobConfig(buckets = 4, tasks = 8))
 
     val a = ExtractJob.readDocs(spark, out1)
       .select("url", "status", "extracted_text", "total_pages")
     val b = ExtractJob.readDocs(spark, out8)
       .select("url", "status", "extracted_text", "total_pages")
+    assert(a.exceptAll(b).count() == 0)
+    assert(b.exceptAll(a).count() == 0)
+  }
+
+  test("hot bucket: one bucket larger than the advisory partition size is " +
+    "written by several tasks, with the same rows as one writer task") {
+    val input = SynthSource.pages(spark, N, seed = 13L).toDF()
+    val out1 = tmp(); val outHot = tmp()
+    // buckets = 1 puts every row in one bucket
+    ExtractJob.run(spark, input, out1, JobConfig(buckets = 1, tasks = 1))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    try ExtractJob.run(spark, input, outHot, JobConfig(buckets = 1))
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+
+    val files = new java.io.File(outHot, "docs/bucket=0").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files > 1, s"the hot bucket was written as $files file(s)")
+    val a = ExtractJob.readDocs(spark, out1)
+      .select("url", "status", "extracted_text", "total_pages")
+    val b = ExtractJob.readDocs(spark, outHot)
+      .select("url", "status", "extracted_text", "total_pages")
+    assert(a.count() == N)
     assert(a.exceptAll(b).count() == 0)
     assert(b.exceptAll(a).count() == 0)
   }

@@ -4,10 +4,16 @@ import java.nio.file.Files
 
 import graft.expr.Shingles64Expr
 import graft.ops.{Dedup, Similarity}
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{Exchange, REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * relational prologue sits before the opaque typed kernel node, and the
   * operators broadcast/shuffle where intended. These lock the 100 TB plan
   * shape at test time, not just the row values. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -486,5 +492,58 @@ class PlanSpec extends AnyFunSuite {
     assertLambdaFreeShingles("duplicatedSpanSegments",
       Dedup.duplicatedSpanSegments(docs, 8, 12, 2L, keepFirst = false)
         .queryExecution.optimizedPlan)
+  }
+
+  test("bucketed writes: ExtractJob's docs/ and CurateJob's curated/ each " +
+    "REBALANCE once by bucket, above the kernel, and write one file per bucket") {
+    // every write's executed plan, keyed by the table directory it wrote
+    // (AQE wraps the whole write command, so search through its stages)
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collect(qe.executedPlan) {
+          case w @ DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) =>
+            writes.put(cmd.outputPath.getName, w)
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = Files.createTempDirectory("graft_plan_sink_").toString
+    spark.listenerManager.register(listener)
+    try {
+      ExtractJob.run(spark, spark.read.parquet(corpus), dir, JobConfig(buckets = 8))
+      CurateJob.run(spark, ExtractJob.readDocs(spark, dir), "url",
+        "extracted_text", "lang", dir, CurateConfig(buckets = 8))
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+
+    Seq("docs", "curated").foreach { table =>
+      val p = writes.get(table)
+      assert(p != null, s"no write of $table/ observed: ${writes.keySet}")
+      val exchanges = collect(p) { case e: ShuffleExchangeExec => e }
+      val rebalances = exchanges.filter(_.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL)
+      assert(rebalances.size == 1, s"$table: ${rebalances.size} rebalances among " +
+        exchanges.map(_.simpleString(8)).mkString("; "))
+      val keys = rebalances.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => fail(s"$table: rebalance partitioned as $other")
+      }
+      assert(keys == Seq("bucket"), s"$table: rebalance keyed on $keys")
+    }
+    val kernels = collect(writes.get("docs")) { case m: MapPartitionsExec => m }
+    assert(kernels.nonEmpty, "kernel node missing from the docs write")
+    kernels.foreach { k =>
+      val below = collect(k) { case e: Exchange => e.simpleString(8) }
+      assert(below.isEmpty, s"shuffle below the kernel in the docs write: $below")
+    }
+
+    Seq("docs", "curated").foreach { table =>
+      val buckets = new java.io.File(dir, table).listFiles()
+        .filter(_.getName.startsWith("bucket="))
+      assert(buckets.nonEmpty, s"$table/ has no bucket directories")
+      buckets.foreach { b =>
+        val files = b.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"$table/${b.getName}: ${files.mkString(", ")}")
+      }
+    }
   }
 }
